@@ -14,7 +14,7 @@ import graft.streaming.CarbonStream
   * the rollup accumulator while api/api.go:30-51 serves). Here the three
   * arms are:
   *
-  *  - INGEST: `CarbonStream.startRollupFlush` — a live Structured
+  *  - INGEST: `CarbonStream.flushToStore` — a live Structured
   *    Streaming query, one mergeable state slice appended to the store
   *    per flush cycle;
   *  - SERVE: `MetricsHttpServer` over a `StoreBackend` — every HTTP
@@ -45,8 +45,8 @@ final class Daemon(spark: SparkSession, store: String,
     * deterministically; the daemon keeps serving while it runs.
     */
   def startIngest(srcDir: String, glob: String = "*.parquet"): StreamingQuery = {
-    ingestQ = CarbonStream.startRollupFlush(spark, srcDir, store, glob,
-      () => rollupDefs)
+    ingestQ = CarbonStream.flushToStore(CarbonStream.eventSlices(spark, srcDir, glob),
+      store, () => rollupDefs).start()
     ingestQ
   }
 
@@ -91,25 +91,21 @@ final class Daemon(spark: SparkSession, store: String,
   def startUdpIngest(srcDir: String): Int = {
     require(udp == null && tcp == null, "one wire arm per daemon")
     udp = new UdpListener
-    ingestQ = CarbonStream.startMetricRollupFlush(spark, srcDir, store,
-      config = () => rollupDefs)
-    udpSrcDir = srcDir
+    startWireFlush(srcDir)
     udp.port
   }
-  @volatile private var udpSrcDir: String = _
 
   /** Drain the UDP listener's accepted rows into one flush slice; returns
     * rows flushed (0 = nothing pending, no slice staged).
     */
   def udpFlush(name: String): Int = {
     require(udp != null, "startUdpIngest first")
-    udp.flush(spark, udpSrcDir, name)
+    udp.flush(spark, wireSrcDir, name)
   }
 
   def listener: UdpListener = udp
 
   @volatile private var tcp: TcpListener = _
-  @volatile private var tcpSrcDir: String = _
 
   /** The reference's PRIMARY wire transport (carbonTCP,
     * carbon_plaintext.go:68-123): bind a TCP accept loop whose
@@ -120,10 +116,23 @@ final class Daemon(spark: SparkSession, store: String,
   def startTcpIngest(srcDir: String): Int = {
     require(udp == null && tcp == null, "one wire arm per daemon")
     tcp = new TcpListener
-    ingestQ = CarbonStream.startMetricRollupFlush(spark, srcDir, store,
-      config = () => rollupDefs)
-    tcpSrcDir = srcDir
+    startWireFlush(srcDir)
     tcp.port
+  }
+
+  @volatile private var wireSrcDir: String = _
+
+  /** Both wire arms' flush query: the staged `(path, value, ts,
+    * event_id)` metric slices the listener writes to `srcDir`, one flush
+    * cycle per staged file.
+    */
+  private def startWireFlush(srcDir: String): Unit = {
+    val slices = spark.readStream.schema(Daemon.MetricSliceSchema)
+      .option("pathGlobFilter", "*.parquet")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(srcDir)
+    ingestQ = CarbonStream.flushToStore(slices, store, () => rollupDefs).start()
+    wireSrcDir = srcDir
   }
 
   /** Drain the TCP listener's accepted rows into one flush slice; returns
@@ -131,7 +140,7 @@ final class Daemon(spark: SparkSession, store: String,
     */
   def tcpFlush(name: String): Int = {
     require(tcp != null, "startTcpIngest first")
-    tcp.flush(spark, tcpSrcDir, name)
+    tcp.flush(spark, wireSrcDir, name)
   }
 
   def tcpListener: TcpListener = tcp
@@ -151,10 +160,9 @@ final class Daemon(spark: SparkSession, store: String,
     */
   def enablePeering(peers: Map[String, String]): Unit = {
     require(udp != null || tcp != null, "start a wire arm first")
-    val (h, srcDir) =
-      if (tcp != null) (tcp.handler, tcpSrcDir) else (udp.handler, udpSrcDir)
+    val h = if (tcp != null) tcp.handler else udp.handler
     h.onPeerChange = _ => {
-      h.flush(spark, srcDir, s"peer_reload_${reloadSeq.incrementAndGet()}.parquet")
+      h.flush(spark, wireSrcDir, s"peer_reload_${reloadSeq.incrementAndGet()}.parquet")
       ()
     }
     if (tcp != null) tcp.enablePeering(peers) else udp.enablePeering(peers)
@@ -228,6 +236,9 @@ final class Daemon(spark: SparkSession, store: String,
 }
 
 object Daemon {
+
+  private val MetricSliceSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "path STRING, value DOUBLE, ts BIGINT, event_id BIGINT")
 
   /** Boot a daemon from a full cassabon.yaml — cassabon.go's main wiring
     * (cassabon.go:60-120: read config, open the stats writer against

@@ -198,7 +198,7 @@ object Rollups {
     * operator: the point stream is split into three deterministic flush
     * cycles, each cycle appends its MERGEABLE state to the partitioned
     * `RollupStore` (the batch twin of
-    * `CarbonStream.streamRollupsToStore`'s foreachBatch slices), a
+    * `CarbonStream.flushToStore`'s foreachBatch slices), a
     * compaction rewrite collapses the store mid-ingest (the
     * behind-the-frontier maintenance pass), the final cycle appends
     * AFTER compaction, and the read merges-on-read and finalizes.

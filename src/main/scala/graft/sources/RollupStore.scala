@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.RollupConfig
@@ -42,7 +42,7 @@ object RollupStore {
 
   /** Append one flush cycle's MERGEABLE rollup state (see
     * `Rollups.mergeableFrom`) into the same partition layout — the
-    * streaming-flush write path (`CarbonStream.streamRollupsToStore`).
+    * streaming-flush write path (`CarbonStream.flushToStore`).
     * Append-only: collisions between cycles are resolved by the
     * associative merge at read ([[readFinalized]]) or by a compaction
     * rewrite, never by read-modify-write during ingest.
@@ -105,14 +105,17 @@ object RollupStore {
     * into exactly that transient view. Batch/oracle paths keep the STRICT
     * [[readFinalized]]: outside live serving, a vanished file is
     * corruption and must fail loudly.
+    *
+    * A store the first flush has not created yet reads as empty, so a
+    * daemon answers empty series before its first flush cycle lands.
     */
   def readFinalizedResilient(spark: SparkSession, path: String): DataFrame = {
-    recoverIfNeeded(spark, path)
+    val state =
+      if (recoverIfNeeded(spark, path))
+        spark.read.schema(StateSchema).option("ignoreMissingFiles", "true").parquet(path)
+      else spark.createDataFrame(java.util.Collections.emptyList[Row](), StateSchema)
     graft.operators.Rollups.finalize(
-      graft.operators.Rollups.mergeAll(
-        spark.read.schema(StateSchema)
-          .option("ignoreMissingFiles", "true").parquet(path)
-          .drop("stat_date")))
+      graft.operators.Rollups.mergeAll(state.drop("stat_date")))
   }
 
   /** Optimistic read-retry for serving-path ACTIONS over the store.
@@ -503,12 +506,14 @@ object RollupStore {
     * swapIn later replaced the whole directory. Recovering first means no
     * slice can ever land in (and no read can ever observe) a half-swapped
     * store. Cost when healthy: one `exists` on `_compact`, nothing else.
+    * Returns whether the store exists at all.
     */
-  private def recoverIfNeeded(spark: SparkSession, path: String): Unit = {
+  private def recoverIfNeeded(spark: SparkSession, path: String): Boolean = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root))
-      recover(fs, root, new org.apache.hadoop.fs.Path(root, "_compact"))
+    val exists = fs.exists(root)
+    if (exists) recover(fs, root, new org.apache.hadoop.fs.Path(root, "_compact"))
+    exists
   }
 
   /** TTL-enforced read: each table only yields rows newer than its

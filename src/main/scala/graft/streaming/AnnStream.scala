@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.UUID
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -43,28 +41,22 @@ object AnnStream {
   private def embeddingsSchema(spark: SparkSession, dir: String): StructType =
     spark.read.parquet(s"$dir/embeddings.parquet").schema
 
-  def annQuery(spark: SparkSession, dir: String): DataFrame = {
-    val batchVecs = Similarity.fixedVecs(spark, dir)
-    val cents = Similarity.seedCents(batchVecs)
+  /** The embeddings fixture streamed through `assignNearest`'s
+    * complete-mode cell aggregation: the live inverted-list membership.
+    */
+  private def liveMembership(spark: SparkSession, dir: String,
+      cents: DataFrame): DataFrame = {
     val stream = spark.readStream
       .schema(embeddingsSchema(spark, dir))
       .option("pathGlobFilter", "embeddings.parquet")
       .parquet(dir)
-    val sink = "stream_ann_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = Similarity.assignNearest(Similarity.fixedVecsFrom(stream), cents)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    val assigned = CarbonStream.drainMemorySink(spark, sink)
+    Similarity.assignNearest(Similarity.fixedVecsFrom(stream), cents)
+  }
+
+  def annQuery(spark: SparkSession, dir: String): DataFrame = {
+    val batchVecs = Similarity.fixedVecs(spark, dir)
+    val cents = Similarity.seedCents(batchVecs)
+    val assigned = StreamRun.collect(liveMembership(spark, dir, cents), "complete")
     Similarity.topKFromCands(Similarity.ivfCandsFromAssigned(assigned,
       Similarity.ivfProbeLists(batchVecs, cents, Similarity.NProbe)))
   }
@@ -82,25 +74,7 @@ object AnnStream {
     */
   def semanticQuery(spark: SparkSession, dir: String): DataFrame = {
     val cents = Similarity.seedCents(Similarity.fixedVecs(spark, dir))
-    val stream = spark.readStream
-      .schema(embeddingsSchema(spark, dir))
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir)
-    val sink = "stream_semantic_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = Similarity.assignNearest(Similarity.fixedVecsFrom(stream), cents)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    val drained = CarbonStream.drainMemorySink(spark, sink)
+    val drained = StreamRun.collect(liveMembership(spark, dir, cents), "complete")
     Similarity.semanticFromAssigned(
       spark.createDataFrame(drained.rdd, drained.schema),
       Similarity.DupThreshold)
@@ -134,28 +108,20 @@ object AnnStream {
     fsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(fsRoot, true) // fresh lifecycle per run
     val raw = spark.read.parquet(s"$dir/embeddings.parquet")
-    val src = java.nio.file.Files.createTempDirectory("stream_ann_stored_src").toString
-    DedupStream.writeFiles((0 until 3).map { i =>
-      (raw.filter(pmod(col("vec_id"), lit(3)) === i),
-        s"$src/slice$i.parquet", (3 - i) * 60000L)
-    }: _*)
-    try {
-      CarbonStream.withStreamPartitions(spark) {
-        val stream = spark.readStream
-          .schema(raw.schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(src)
-        val q = Similarity.fixedVecsFrom(stream)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            VecIndexStore.append(
-              Similarity.assignNearestLocal(batch, cents)
-                .select("vec_id", "v", "nrm", "c_id"), idx)
-          }
-          .outputMode("append")
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+    val slices = (0 until 3).map(i => raw.filter(pmod(col("vec_id"), lit(3)) === i))
+    StreamRun.replay("stream_ann_stored_src", slices) { src =>
+      val stream = spark.readStream
+        .schema(raw.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+      StreamRun.drain(spark, Similarity.fixedVecsFrom(stream)
+        .writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          VecIndexStore.append(
+            Similarity.assignNearestLocal(batch, cents)
+              .select("vec_id", "v", "nrm", "c_id"), idx)
+        }
+        .outputMode("append"))
       VecIndexStore.compact(spark, idx)
       val probeLists = Similarity.ivfProbeLists(batchVecs, cents, Similarity.NProbe)
       val routed = probeLists.select("c_id").distinct()
@@ -163,8 +129,6 @@ object AnnStream {
       val lists = VecIndexStore.read(spark, idx)
         .filter(col("c_id").isin(routed: _*))
       Similarity.topKFromCands(Similarity.ivfCandsFromAssigned(lists, probeLists))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src))
     }
   }
 

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import java.util.UUID
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
 
 import graft.Op
@@ -23,68 +22,6 @@ import graft.model.Tables
   * is exercised in the ScalaTest spec via MemoryStream.
   */
 object CarbonStream {
-
-  /** Stateful streaming queries get one state-store instance PER shuffle
-    * partition, and every micro-batch commits a delta file per instance —
-    * so partition count is a per-commit IO cost, not just parallelism. The
-    * batch default (32, matched to local[32]) wastes 4x the checkpoint IO
-    * these key cardinalities (~10k) need; on a real cluster this knob is
-    * sized to executor count x a small factor, exactly as here.
-    */
-  val StreamShufflePartitions = 8
-
-  /** The default HDFS-backed state store keeps every state version ON-HEAP
-    * per executor — fine for the ~10k-key fixtures, but at a 100 TB
-    * ingest the keyed-state working set is what bounds how long a
-    * stateful query can run. RocksDB keeps state off-heap/on-disk with
-    * changelog checkpointing, so state size is bounded by executor DISK,
-    * not heap — the run-forever posture. Opt in per session with
-    * `spark.graft.stateStore.rocksdb=true` (or env
-    * `SPARK_GRAFT_ROCKSDB=1`); the flag is read at `start()` time by
-    * [[withStreamPartitions]], so batch plans and existing benchmarks are
-    * untouched.
-    */
-  val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  val RocksDbFlag = "spark.graft.stateStore.rocksdb"
-  private val ProviderConf = "spark.sql.streaming.stateStore.providerClass"
-
-  private def rocksDbEnabled(spark: SparkSession): Boolean =
-    spark.conf.getOption(RocksDbFlag)
-      .orElse(sys.env.get("SPARK_GRAFT_ROCKSDB"))
-      .exists(v => v == "true" || v == "1")
-
-  /** Run `body` with the session's shuffle partitions temporarily lowered
-    * to [[StreamShufflePartitions]] and, when [[RocksDbFlag]] is set, the
-    * RocksDB state-store provider selected (streaming plans bind both
-    * values at `start()`), restoring the batch settings afterwards.
-    */
-  def withStreamPartitions[T](spark: SparkSession)(body: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevProvider = spark.conf.getOption(ProviderConf)
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions.toString)
-    if (rocksDbEnabled(spark)) spark.conf.set(ProviderConf, RocksDbProvider)
-    try body finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      prevProvider match {
-        case Some(p) => spark.conf.set(ProviderConf, p)
-        case None => spark.conf.unset(ProviderConf)
-      }
-    }
-  }
-
-  /** Resolve a drained memory-sink table and DROP its temp view: Dataset
-    * analysis is eager, so the returned frame stays bound to the sink's
-    * rows, while the catalog entry (and with it the only long-lived
-    * reference keeping every emitted row on the driver once the caller
-    * drops the frame) goes away — repeated verify/bench runs would
-    * otherwise accumulate one UUID-named view + row copy per invocation.
-    */
-  def drainMemorySink(spark: SparkSession, sink: String): DataFrame = {
-    val out = spark.table(sink)
-    spark.catalog.dropTempView(sink)
-    out
-  }
 
   /** The canonical events schema with `ts` ALREADY in the epoch-nanos
     * bigint contract — what a TIMESTAMP(NANOS) file reads as under
@@ -189,24 +126,8 @@ object CarbonStream {
   /** Run the streaming rollup over the events fixture (file source, memory
     * sink, complete mode), block until drained, return the result table.
     */
-  def rollupQuery(spark: SparkSession, dir: String): DataFrame = {
-    val events = eventsStream(spark, dir)
-    val sink = "stream_rollup_" + UUID.randomUUID().toString.replace("-", "")
-    withStreamPartitions(spark) {
-      val q = windowedRollup(toMetrics(events))
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    drainMemorySink(spark, sink)
-  }
+  def rollupQuery(spark: SparkSession, dir: String): DataFrame =
+    StreamRun.collect(windowedRollup(toMetrics(eventsStream(spark, dir))), "complete")
 
   /** The streaming quantile sketch: the bin-count histogram IS the
     * streaming-maintainable state (integer counts, order-immune partials
@@ -219,25 +140,11 @@ object CarbonStream {
     */
   def quantilesQuery(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Carbon
-    val events = eventsStream(spark, dir)
-    val sink = "stream_quantiles_" + UUID.randomUUID().toString.replace("-", "")
-    withStreamPartitions(spark) {
-      val q = events
-        .groupBy(col("event_type"),
-          floor(col("value") / Carbon.QuantileBinW).cast("long").as("bin"))
-        .agg(count(lit(1)).as("c"))
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    Carbon.quantilesFromBins(drainMemorySink(spark, sink))
+    val bins = eventsStream(spark, dir)
+      .groupBy(col("event_type"),
+        floor(col("value") / Carbon.QuantileBinW).cast("long").as("bin"))
+      .agg(count(lit(1)).as("c"))
+    Carbon.quantilesFromBins(StreamRun.collect(bins, "complete"))
   }
 
   /** The streaming cardinality sketch: the 64 HLL registers per event type
@@ -254,27 +161,14 @@ object CarbonStream {
     */
   def cardinalityQuery(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.OpsStats
-    val events = eventsStream(spark, dir)
-    val sink = "stream_cardinality_" + UUID.randomUUID().toString.replace("-", "")
-    withStreamPartitions(spark) {
-      val q = OpsStats.hllRegisterRows(events)
-        .groupBy(col("event_type"), col("r"))
-        .agg(max("rank").as("m"))
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
+    val registers = OpsStats.hllRegisterRows(eventsStream(spark, dir))
+      .groupBy(col("event_type"), col("r"))
+      .agg(max("rank").as("m"))
+    val drained = StreamRun.collect(registers, "complete")
     val exact = Tables.events(spark, dir)
       .groupBy("event_type")
       .agg(countDistinct("user_id").as("n_exact"))
-    OpsStats.hllFinalize(drainMemorySink(spark, sink), exact)
+    OpsStats.hllFinalize(drained, exact)
   }
 
   /** The live path index: the reference's index manager consumes the path
@@ -291,21 +185,7 @@ object CarbonStream {
     */
   def indexQuery(spark: SparkSession, dir: String): DataFrame = {
     val paths = toMetrics(eventsStream(spark, dir)).select("path")
-    val sink = "stream_index_" + UUID.randomUUID().toString.replace("-", "")
-    withStreamPartitions(spark) {
-      val q = graft.operators.Index.indexFrom(paths)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    drainMemorySink(spark, sink)
+    StreamRun.collect(graft.operators.Index.indexFrom(paths), "complete")
   }
 
   /** The live top-volume paths: per-path integer counters are the
@@ -318,23 +198,9 @@ object CarbonStream {
     * `top_paths`' SQL verbatim.
     */
   def topPathsQuery(spark: SparkSession, dir: String): DataFrame = {
-    val metrics = toMetrics(eventsStream(spark, dir))
-    val sink = "stream_top_paths_" + UUID.randomUUID().toString.replace("-", "")
-    withStreamPartitions(spark) {
-      val q = metrics
-        .groupBy("path").agg(count(lit(1)).as("points"))
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    graft.operators.Carbon.topFromCounts(drainMemorySink(spark, sink))
+    val counts = toMetrics(eventsStream(spark, dir))
+      .groupBy("path").agg(count(lit(1)).as("points"))
+    graft.operators.Carbon.topFromCounts(StreamRun.collect(counts, "complete"))
   }
 
   /** The live heavy hitters — the ONLY aggregation in this engine whose
@@ -352,27 +218,13 @@ object CarbonStream {
     import graft.operators.Carbon
     val bits = Carbon.CmsBucketBits
     val bs = Carbon.cmsBuckets(bits)
-    val metrics = toMetrics(eventsStream(spark, dir))
+    val counters = toMetrics(eventsStream(spark, dir))
       .withColumn("h", graft.model.Portable.hash60(col("path")))
       .select(explode(array((0 until Carbon.CmsDepth).map(j =>
         struct(lit(j).as("j"), bs(j).as("bucket"))): _*)).as("jb"))
       .select(col("jb.j").as("j"), col("jb.bucket").as("bucket"))
-    val sink = "stream_cms_" + UUID.randomUUID().toString.replace("-", "")
-    withStreamPartitions(spark) {
-      val q = metrics
-        .groupBy("j", "bucket").agg(count(lit(1)).as("c"))
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    Carbon.cmsTopFrom(drainMemorySink(spark, sink),
+      .groupBy("j", "bucket").agg(count(lit(1)).as("c"))
+    Carbon.cmsTopFrom(StreamRun.collect(counters, "complete"),
       Carbon.pathCounts(spark, dir), bits)
   }
 
@@ -390,22 +242,8 @@ object CarbonStream {
   def anomalyQuery(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Series
     val live = Series.centsFrom(toMetrics(eventsStream(spark, dir)))
-    val sink = "stream_anomaly_" + UUID.randomUUID().toString.replace("-", "")
-    withStreamPartitions(spark) {
-      val q = Series.statsFrom(live)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
     Series.anomalyFrom(Series.centsFrom(Tables.metrics(spark, dir)),
-      drainMemorySink(spark, sink))
+      StreamRun.collect(Series.statsFrom(live), "complete"))
   }
 
   /** Oracle: identical to the batch 60 s average rollup — finite stream in
@@ -444,20 +282,13 @@ object CarbonStream {
     // state and therefore goes through graft.model.Spill.)
     val out = java.nio.file.Files
       .createTempDirectory("stream_rollup_append").toString
-    withStreamPartitions(spark) {
-      val q = windowedRollup(toMetrics(events), watermark = Some("0 seconds"))
+    StreamRun.drain(spark,
+      windowedRollup(toMetrics(events), watermark = Some("0 seconds"))
         .writeStream
         .format("parquet")
         .option("path", s"$out/data")
         .option("checkpointLocation", s"$out/chk")
-        .outputMode("append")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
+        .outputMode("append"))
     spark.read.parquet(s"$out/data")
   }
 
@@ -489,32 +320,18 @@ object CarbonStream {
     * reference's re-accumulation on flush collision. At 100 TB each flush
     * cycle is a map-side-combined aggregation of just that cycle's points,
     * and the store stays partition-pruned on (tbl, stat_date).
+    *
+    * This is the flush writer for a `(path, value, ts, event_id)` metric
+    * stream: staged events ([[eventSlices]]) or the wire listeners' staged
+    * metric slices. The caller owns the query's lifetime (`graft.Daemon`
+    * starts it and runs it CONCURRENTLY with the HTTP server and store
+    * maintenance; [[streamRollupsToStore]] drains and stops it). Safe
+    * beside a live `compact`: appends under a young lease skip recovery,
+    * and the additive swap cannot touch files it didn't fold.
     */
-  /** Start (and return) the LIVE flush query — the daemon's ingest arm:
-    * each staged source file becomes one micro-batch, reduced to its
-    * mergeable rollup state and appended to the store as one slice. The
-    * caller owns the query's lifetime (`graft.Daemon` runs it CONCURRENTLY
-    * with the HTTP server and store maintenance; [[streamRollupsToStore]]
-    * is the drain-and-stop batch harness). Safe beside a live `compact`:
-    * appends under a young lease skip recovery, and the additive swap
-    * cannot touch files it didn't fold.
-    */
-  def startRollupFlush(spark: SparkSession, srcDir: String, store: String,
-      glob: String = "*.parquet",
+  def flushToStore(metrics: DataFrame, store: String,
       config: () => Seq[graft.model.RollupDef] =
-        () => graft.model.RollupConfig.reference)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // one flush cycle per staged file
-    val events = eventsStream(spark, srcDir, glob, maxFilesPerTrigger = Some(1))
-    // Tables.metrics' mapping plus event_id — the five-method mergeable
-    // state needs it for the LAST tiebreak key ([[toMetrics]] serves the
-    // average-only windowed forms and deliberately drops it).
-    val metrics = events.select(
-      concat(lit("servers."), col("event_type"), lit(".u"),
-        (col("user_id") % 8).cast("string")).as("path"),
-      col("value"),
-      expr("ts DIV 1000000000").as("ts"),
-      col("event_id"))
+        () => graft.model.RollupConfig.reference): DataStreamWriter[Row] =
     metrics.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -523,47 +340,19 @@ object CarbonStream {
         graft.sources.RollupStore.appendStateSlice(
           graft.operators.Rollups.mergeableWith(batch, config()), store)
       }
-      .start()
-  }
 
-  /** The flush query over STAGED METRIC slices — the [[graft.UdpListener]]
-    * bridge: each staged `(path, value, ts, event_id)` parquet file is one
-    * flush cycle, appended to the store as mergeable state. Identical
-    * foreachBatch to [[startRollupFlush]]; the events→metrics mapping is
-    * simply absent because the socket already delivers metric rows.
+  /** Staged events slices as the metric stream [[flushToStore]] takes,
+    * one flush cycle per staged file. `keepId` carries `event_id`: the
+    * five-method mergeable state needs it for the LAST tiebreak key.
     */
-  def startMetricRollupFlush(spark: SparkSession, srcDir: String, store: String,
-      glob: String = "*.parquet",
-      config: () => Seq[graft.model.RollupDef] =
-        () => graft.model.RollupConfig.reference)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("path", StringType), StructField("value", DoubleType),
-      StructField("ts", LongType), StructField("event_id", LongType)))
-    spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.RollupStore.appendStateSlice(
-          graft.operators.Rollups.mergeableWith(batch, config()), store)
-      }
-      .start()
-  }
+  def eventSlices(spark: SparkSession, srcDir: String,
+      glob: String = "*.parquet"): DataFrame =
+    toMetrics(eventsStream(spark, srcDir, glob, maxFilesPerTrigger = Some(1)),
+      keepId = true)
 
   def streamRollupsToStore(spark: SparkSession, srcDir: String, store: String,
       glob: String = "*.parquet"): Unit =
-    withStreamPartitions(spark) {
-      val q = startRollupFlush(spark, srcDir, store, glob)
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
+    StreamRun.drain(spark, flushToStore(eventSlices(spark, srcDir, glob), store))
 
   /** The LIVE form of `series_fill`: the dashboard gap-repaired range read
     * served from stream state instead of a batch aggregation. The state is
@@ -583,22 +372,8 @@ object CarbonStream {
       toMetrics(eventsStream(spark, dir), keepId = true)
         .filter(col("path") === MetricQuery.FetchPath))
       .filter(col("tbl") === MetricQuery.FetchTable)
-    val sink = "stream_fill_" + UUID.randomUUID().toString.replace("-", "")
-    withStreamPartitions(spark) {
-      val q = live
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
     Series.fillLastFrom(
-      MetricQuery.fetchFrom(spark, dir, drainMemorySink(spark, sink)))
+      MetricQuery.fetchFrom(spark, dir, StreamRun.collect(live, "complete")))
   }
 
   /** The live trend fit: `series_linreg`'s per-path moment tuple
@@ -615,21 +390,7 @@ object CarbonStream {
   def linregQuery(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Series
     val live = Series.centsFrom(toMetrics(eventsStream(spark, dir)))
-    val sink = "stream_linreg_" + UUID.randomUUID().toString.replace("-", "")
-    withStreamPartitions(spark) {
-      val q = Series.linregMomentsFrom(live)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    Series.linregFrom(drainMemorySink(spark, sink))
+    Series.linregFrom(StreamRun.collect(Series.linregMomentsFrom(live), "complete"))
   }
 
   def ops: Seq[Op] = Seq(

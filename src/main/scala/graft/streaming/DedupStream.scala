@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.UUID
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -35,6 +33,13 @@ object DedupStream {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
+  /** The documents fixture as a file-source stream (one micro-batch). */
+  private def documentsStream(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream
+      .schema(documentsSchema)
+      .option("pathGlobFilter", "documents.parquet")
+      .parquet(dir)
+
   /** doc stream -> (text_hash, keep_id, n_copies) streaming aggregation. */
   def dedupAgg(docs: DataFrame): DataFrame = {
     val base = docs.select(col("doc_id"), col("text"))
@@ -48,27 +53,8 @@ object DedupStream {
   /** Run the streaming dedup over the documents fixture (file source,
     * memory sink, complete mode), block until drained, return the table.
     */
-  def dedupQuery(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.readStream
-      .schema(documentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-    val sink = "stream_dedup_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = dedupAgg(docs)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    CarbonStream.drainMemorySink(spark, sink)
-  }
+  def dedupQuery(spark: SparkSession, dir: String): DataFrame =
+    StreamRun.collect(dedupAgg(documentsStream(spark, dir)), "complete")
 
   /** Oracle: identical to the batch exact dedup — finite stream in
     * complete mode must equal the batch aggregation (Dedup.exactSql).
@@ -93,52 +79,6 @@ object DedupStream {
                       // any data has even set a watermark. A constant shift
                       // leaves every keep/drop inequality invariant, so the
                       // oracle needs no ts at all.
-
-  /** Write `df` as ONE parquet file at `target`, with a controlled
-    * modification time so the file stream source replays files in a fixed
-    * order (it lists unread files oldest-mtime-first).
-    */
-  private[streaming] def writeOneFile(df: DataFrame, target: String, ageMs: Long): Unit = {
-    // Harness-local BY DESIGN (here and in dedupWatermarkQuery below):
-    // these temp dirs stage the deterministic micro-batch replay fixture
-    // for a single-process verification run — they are test plumbing, not
-    // operator state. A real deployment's
-    // source/sink/checkpoint all live on shared storage; operator state
-    // that must survive distribution goes through graft.model.Spill.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_onefile")
-    df.coalesce(1).write.mode("overwrite").parquet(s"$tmp/out")
-    val part = java.nio.file.Files.list(java.nio.file.Paths.get(s"$tmp/out"))
-      .filter(p => p.getFileName.toString.endsWith(".parquet"))
-      .findFirst().get()
-    val dst = java.nio.file.Paths.get(target)
-    java.nio.file.Files.move(part, dst)
-    java.nio.file.Files.setLastModifiedTime(dst,
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - ageMs))
-  }
-
-  /** A replay fixture's files written CONCURRENTLY from a small pool —
-    * each [[writeOneFile]] is one tiny coalesce(1) job whose task tail
-    * leaves the other cores idle, and every replay stages 3-7 of them
-    * back to back (the §2.6 driver-thread overlap pattern, same as
-    * curate's gate construction). Order cannot matter by construction:
-    * targets are distinct paths and the replay ORDER rides the explicit
-    * `ageMs` mtimes, not write completion order; slices come off frames
-    * whose blocks the caller already materialized (min/max collects), so
-    * concurrent jobs read cached blocks.
-    */
-  private[streaming] def writeFiles(files: (DataFrame, String, Long)*): Unit = {
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(files.size)
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutorService(pool)
-    try {
-      val fs = files.map { case (df, target, age) =>
-        Future(writeOneFile(df, target, age))
-      }
-      fs.foreach(Await.result(_, Duration.Inf))
-    } finally pool.shutdown()
-  }
 
   /** The STATE-BOUNDED form — the only dedup that can run FOREVER:
     * `dropDuplicatesWithinWatermark` keeps a key only until the watermark
@@ -184,7 +124,7 @@ object DedupStream {
     // persist: the md5-over-full-text aggregation is the expensive part of
     // this operator, and the fixture build otherwise recomputes it four
     // times (base file, replay file, sentinel file, max collect); freed
-    // (blocking) before the stream runs, so the op returns leak-free.
+    // (blocking) once the stream has run, so the op returns leak-free.
     val deduped = graft.model.Tables.documents(spark, dir)
       .groupBy(md5Hex(col("text")).as("text_hash"))
       .agg(min("doc_id").as("doc_id"))
@@ -198,13 +138,6 @@ object DedupStream {
     val sentinel = deduped.filter(col("doc_id") === mx)
       .select((col("doc_id") + 2000000L).as("doc_id"),
         col("text_hash"), (col("doc_id") + TsOffset).as("ts"))
-    val src = java.nio.file.Files.createTempDirectory("stream_dedup_wm_src").toString
-    writeFiles(
-      (base, s"$src/batch0.parquet", 120000L),
-      (sentinel, s"$src/batch1.parquet", 90000L),
-      (replay, s"$src/batch2.parquet", 60000L))
-    deduped.unpersist(blocking = true)
-
     val streamSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("text_hash", StringType),
@@ -213,28 +146,16 @@ object DedupStream {
     // test are the watermark/state-eviction rules, and a file sink adds a
     // per-micro-batch parquet commit (8 files + _spark_metadata per batch
     // at the bound partition count) that only measures sink IO.
-    val sink = "stream_dedup_wm_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = spark.readStream
+    try StreamRun.replay("stream_dedup_wm_src", Seq(base, sentinel, replay)) { src =>
+      StreamRun.collect(spark.readStream
         .schema(streamSchema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
         .withColumn("tts", timestamp_seconds(col("ts")))
         .withWatermark("tts", s"$Horizon seconds")
         .dropDuplicatesWithinWatermark("text_hash")
-        .select("doc_id", "text_hash")
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    CarbonStream.drainMemorySink(spark, sink)
+        .select("doc_id", "text_hash"), "append")
+    } finally deduped.unpersist(blocking = true)
   }
 
   private val dedupWatermarkSql: String =
@@ -285,10 +206,7 @@ object DedupStream {
     // batch distinct over (doc_id, shingle)) — no stateful `distinct()`.
     val hash60Sql =
       "CAST(conv(substring(md5(CAST(concat_ws(' ', slice(t, i, 3)) AS BINARY)), 1, 15), 16, 10) AS BIGINT)"
-    val sh = spark.readStream
-      .schema(documentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val sh = documentsStream(spark, dir)
       .withColumn("t", split(col("text"), " "))
       .filter(size(col("t")) >= 3)
       .select(col("doc_id"), explode(expr(
@@ -311,21 +229,7 @@ object DedupStream {
       .agg(sum(when(bloomHit, 1L).otherwise(0L)).as("n_bloom"),
         count(col("hit")).as("n_shared"))
 
-    val sink = "stream_decon_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = counts
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    Dedup.bloomVerdict(CarbonStream.drainMemorySink(spark, sink))
+    Dedup.bloomVerdict(StreamRun.collect(counts, "complete"))
   }
 
   // ------------------------------------------------------------ stream_chunk
@@ -340,27 +244,9 @@ object DedupStream {
     * it arrives, ship chunks downstream, remember nothing). Oracle =
     * `chunk_documents`' SQL verbatim.
     */
-  def chunkQuery(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.readStream
-      .schema(documentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-    val sink = "stream_chunk_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = graft.operators.TextOps.chunkDocumentsFrom(docs)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    CarbonStream.drainMemorySink(spark, sink)
-  }
+  def chunkQuery(spark: SparkSession, dir: String): DataFrame =
+    StreamRun.collect(graft.operators.TextOps.chunkDocumentsFrom(
+      documentsStream(spark, dir)), "append")
 
   // -------------------------------------------------------- stream_chunk_ann
 
@@ -379,26 +265,9 @@ object DedupStream {
     */
   def chunkAnnQuery(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.TextOps
-    val docs = spark.readStream
-      .schema(documentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-    val sink = "stream_cann_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = TextOps.chunkDenseRowLocal(docs)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    TextOps.chunkAnnFrom(spark, dir,
-      CarbonStream.drainMemorySink(spark, sink),
+    val index = StreamRun.collect(
+      TextOps.chunkDenseRowLocal(documentsStream(spark, dir)), "append")
+    TextOps.chunkAnnFrom(spark, dir, index,
       TextOps.chunkCentsFor(spark, dir, "trained", TextOps.ChunkCentMod),
       TextOps.ChunkNProbe)
   }
@@ -417,26 +286,10 @@ object DedupStream {
     * each arriving doc map-side). Oracle = `mix_rebalance`'s SQL verbatim.
     */
   def mixQuery(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.readStream
-      .schema(documentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-    val sink = "stream_mix_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = docs.groupBy("lang").agg(count(lit(1)).as("n_docs"))
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
+    val counts = documentsStream(spark, dir)
+      .groupBy("lang").agg(count(lit(1)).as("n_docs"))
     graft.operators.TextOps.mixFromCounts(spark,
-      CarbonStream.drainMemorySink(spark, sink),
+      StreamRun.collect(counts, "complete"),
       graft.model.Tables.documents(spark, dir))
   }
 
@@ -454,29 +307,12 @@ object DedupStream {
     * verbatim.
     */
   def surprisalQuery(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.readStream
-      .schema(documentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-    val sink = "stream_surprisal_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = docs
-        .select(explode(split(lower(col("text")), " ")).as("tok"))
-        .groupBy("tok").agg(count(lit(1)).as("tf"))
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
+    val tf = documentsStream(spark, dir)
+      .select(explode(split(lower(col("text")), " ")).as("tok"))
+      .groupBy("tok").agg(count(lit(1)).as("tf"))
     graft.operators.TextOps.surprisalFromTf(
       graft.model.Tables.documents(spark, dir),
-      CarbonStream.drainMemorySink(spark, sink))
+      StreamRun.collect(tf, "complete"))
   }
 
   // -------------------------------------------------------------- stream_pack
@@ -545,47 +381,16 @@ object DedupStream {
         size(split(col("text"), " ")).cast("long").as("n_tok"),
         expr(s"doc_id div $PackShardSize").as("shard"))
       .as[PackDoc].persist()
-    val src = java.nio.file.Files.createTempDirectory("stream_pack_src").toString
-    try {
-      val (lo, hi) = {
-        val r = docs.agg(min("doc_id"), max("doc_id")).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      val (c1, c2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-      writeFiles(
-        (docs.filter(col("doc_id") <= c1).toDF(),
-          s"$src/batch0.parquet", 120000L),
-        (docs.filter(col("doc_id") > c1 && col("doc_id") <= c2).toDF(),
-          s"$src/batch1.parquet", 90000L),
-        (docs.filter(col("doc_id") > c2).toDF(),
-          s"$src/batch2.parquet", 60000L))
-    } finally docs.unpersist(blocking = true)
-
     val schema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("n_tok", LongType),
       StructField("shard", LongType)))
-    val sink = "stream_pack_" + UUID.randomUUID().toString.replace("-", "")
-    try {
-      CarbonStream.withStreamPartitions(spark) {
-        val q = packMachine(
-          spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src).as[PackDoc])
-          .toDF()
-          .writeStream
-          .format("memory")
-          .queryName(sink)
-          .outputMode("append")
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
-      CarbonStream.drainMemorySink(spark, sink)
-    } finally {
-      // the drained memory sink holds the rows; the replay files are done
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src))
-    }
+    try StreamRun.replay("stream_pack_src", StreamRun.tertiles(docs, col("doc_id"))) { src =>
+      StreamRun.collect(packMachine(
+        spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", 1)
+          .parquet(src).as[PackDoc]).toDF(), "append")
+    } finally docs.unpersist(blocking = true)
   }
 
   // ------------------------------------------------------------ stream_phash
@@ -604,29 +409,11 @@ object DedupStream {
     */
   def phashQuery(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Multimodal
-    val docs = spark.readStream
-      .schema(documentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
     val banded = Multimodal.bandedFrom(Multimodal.featuresFrom(
-      Multimodal.blobsFrom(docs)))
-    val sink = "stream_phash_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = banded
-        .groupBy("doc_id", "media_kind", "phash", "band", "sig")
-        .agg(count(lit(1)).as("n"))
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    val drained = CarbonStream.drainMemorySink(spark, sink)
+      Multimodal.blobsFrom(documentsStream(spark, dir))))
+      .groupBy("doc_id", "media_kind", "phash", "band", "sig")
+      .agg(count(lit(1)).as("n"))
+    val drained = StreamRun.collect(banded, "complete")
       .select("doc_id", "media_kind", "phash", "band", "sig")
     // pairsFromBanded SELF-joins the frame: rebase off the memory-sink
     // View first (Catalyst's conflicting-references gotcha, stream_cohort)
@@ -659,47 +446,28 @@ object DedupStream {
     outRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(outRoot, true) // fresh run
     val docs = graft.model.Tables.documents(spark, dir).persist()
-    val src = java.nio.file.Files.createTempDirectory("stream_bpe_src").toString
-    try {
-      val (lo, hi) = {
-        val r = docs.agg(min("doc_id"), max("doc_id")).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      val (c1, c2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-      writeFiles(
-        (docs.filter(col("doc_id") <= c1), s"$src/batch0.parquet", 120000L),
-        (docs.filter(col("doc_id") > c1 && col("doc_id") <= c2),
-          s"$src/batch1.parquet", 90000L),
-        (docs.filter(col("doc_id") > c2), s"$src/batch2.parquet", 60000L))
-    } finally docs.unpersist(blocking = true)
-    try {
-      CarbonStream.withStreamPartitions(spark) {
-        val q = spark.readStream
-          .schema(documentsSchema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(src)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val words = batch.select(col("doc_id"), explode(
-              expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("word"))
-            val wtok = words.select("word").distinct()
-              .withColumn("n_sym",
-                expr(s"cast(size(split(trim($chain), '  ')) as bigint)"))
-            words.join(broadcast(wtok), "word")
-              .groupBy("doc_id")
-              .agg(count(lit(1)).as("n_words"), sum("n_sym").as("n_tokens"))
-              .select(col("doc_id"), col("n_words"), col("n_tokens"),
-                round(col("n_tokens") / col("n_words"), 6).as("tokens_per_word"))
-              .write.mode("append").parquet(out)
-          }
-          .outputMode("append")
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+    try StreamRun.replay("stream_bpe_src", StreamRun.tertiles(docs, col("doc_id"))) { src =>
+      StreamRun.drain(spark, spark.readStream
+        .schema(documentsSchema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+        .writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          val words = batch.select(col("doc_id"), explode(
+            expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("word"))
+          val wtok = words.select("word").distinct()
+            .withColumn("n_sym",
+              expr(s"cast(size(split(trim($chain), '  ')) as bigint)"))
+          words.join(broadcast(wtok), "word")
+            .groupBy("doc_id")
+            .agg(count(lit(1)).as("n_words"), sum("n_sym").as("n_tokens"))
+            .select(col("doc_id"), col("n_words"), col("n_tokens"),
+              round(col("n_tokens") / col("n_words"), 6).as("tokens_per_word"))
+            .write.mode("append").parquet(out)
+        }
+        .outputMode("append"))
       spark.read.parquet(out)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src))
-    }
+    } finally docs.unpersist(blocking = true)
   }
 
   def ops: Seq[Op] = Seq(

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import java.util.UUID
-
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types._
 
 import graft.Op
 
@@ -72,25 +71,11 @@ object SessionStream {
     */
   def sessionizeQuery(spark: SparkSession, dir: String): DataFrame = {
     implicit val se = Encoders.product[SessEvent]
-    val sink = "stream_sessionize_" + UUID.randomUUID().toString.replace("-", "")
     val events = CarbonStream.eventsStream(spark, dir)
       .select(col("user_id"), expr("ts DIV 1000000000").as("ts_sec"), col("event_id"))
       .as[SessEvent]
-    CarbonStream.withStreamPartitions(spark) {
-      val q = sessionize(events, graft.operators.Analytics.SessionGapSec)
-        .toDF()
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    CarbonStream.drainMemorySink(spark, sink)
+    StreamRun.collect(
+      sessionize(events, graft.operators.Analytics.SessionGapSec).toDF(), "append")
   }
 
   /** Oracle: the batch sessionization minus each user's final (open)
@@ -146,24 +131,11 @@ object SessionStream {
       .select(col("user_id"),
         expr(s"ts DIV 1000000000 DIV ${graft.operators.Analytics.CohortWeekSec}")
           .as("week"))
-    val sink = "stream_cohort_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = ev.groupBy("user_id", "week").agg(count(lit(1)).as("n"))
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
     // the readoff SELF-joins the matrix (first-seen ⋈ activity); a memory
     // sink's View keeps one attribute set, which Catalyst cannot dedup in
     // a self-join — rebase the matrix-sized frame onto fresh attributes
-    val drained = CarbonStream.drainMemorySink(spark, sink)
+    val drained = StreamRun.collect(
+      ev.groupBy("user_id", "week").agg(count(lit(1)).as("n")), "complete")
       .select("user_id", "week")
     graft.operators.Analytics.cohortFrom(
       spark.createDataFrame(drained.rdd, drained.schema))
@@ -184,24 +156,11 @@ object SessionStream {
   def engagementQuery(spark: SparkSession, dir: String): DataFrame = {
     val ev = CarbonStream.eventsStream(spark, dir)
       .select(col("user_id"), expr("ts DIV 86400000000000").as("day"))
-    val sink = "stream_engagement_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = ev.groupBy("user_id", "day").agg(count(lit(1)).as("n"))
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
     // the readoff SELF-joins the matrix (dau ⋈ wau both derive from it);
     // rebase the memory-sink View onto fresh attributes (stream_cohort's
     // conflicting-references gotcha)
-    val drained = CarbonStream.drainMemorySink(spark, sink)
+    val drained = StreamRun.collect(
+      ev.groupBy("user_id", "day").agg(count(lit(1)).as("n")), "complete")
       .select("user_id", "day")
     graft.operators.Analytics.engagementFrom(
       spark.createDataFrame(drained.rdd, drained.schema))
@@ -259,57 +218,29 @@ object SessionStream {
     */
   def transitionsQuery(spark: SparkSession, dir: String): DataFrame = {
     implicit val te = Encoders.product[TransEvent]
+    val ev = keyedEvents(spark, dir).persist()
+    try StreamRun.replay("stream_trans_src", StreamRun.tertiles(ev, col("k"))) { src =>
+      graft.operators.Analytics.transitionProbFrom(StreamRun.collect(
+        transitionsMachine(spark.readStream.schema(keyedSchema)
+          .option("maxFilesPerTrigger", 1)
+          .parquet(src).as[TransEvent]).toDF(), "append"))
+    } finally ev.unpersist(blocking = true)
+  }
+
+  /** `(user_id, event_type, k)` events, `k` the packed (second, event_id)
+    * total-order key — the replay input of the order-defined machines.
+    */
+  private def keyedEvents(spark: SparkSession, dir: String): DataFrame = {
     val shift = graft.model.RollupConfig.LastKeyShift
-    val ev = graft.model.Tables.events(spark, dir)
+    graft.model.Tables.events(spark, dir)
       .select(col("user_id"), col("event_type"),
         expr(s"(ts DIV 1000000000) * $shift + event_id").as("k"))
-      .as[TransEvent].persist()
-    val src = java.nio.file.Files.createTempDirectory("stream_trans_src").toString
-    try {
-      val (lo, hi) = {
-        val r = ev.agg(min("k"), max("k")).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      val (c1, c2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-      DedupStream.writeFiles(
-        (ev.filter(col("k") <= c1).toDF(),
-          s"$src/batch0.parquet", 120000L),
-        (ev.filter(col("k") > c1 && col("k") <= c2).toDF(),
-          s"$src/batch1.parquet", 90000L),
-        (ev.filter(col("k") > c2).toDF(),
-          s"$src/batch2.parquet", 60000L))
-    } finally ev.unpersist(blocking = true)
-
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("k",
-        org.apache.spark.sql.types.LongType)))
-    val sink = "stream_trans_" + UUID.randomUUID().toString.replace("-", "")
-    try {
-      CarbonStream.withStreamPartitions(spark) {
-        val q = transitionsMachine(
-          spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src).as[TransEvent])
-          .toDF()
-          .writeStream
-          .format("memory")
-          .queryName(sink)
-          .outputMode("append")
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
-      graft.operators.Analytics.transitionProbFrom(
-        CarbonStream.drainMemorySink(spark, sink))
-    } finally {
-      // the drained memory sink holds the rows; the replay files are done
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src))
-    }
   }
+
+  private val keyedSchema = StructType(Seq(
+    StructField("user_id", LongType),
+    StructField("event_type", StringType),
+    StructField("k", LongType)))
 
   // ---------------------------------------------- stream_transitions_buffered
 
@@ -365,31 +296,20 @@ object SessionStream {
         })
   }
 
-  /** The LIVE out-of-order form of `event_transitions`: the SAME matrix
-    * readoff, but the replay is deliberately DISORDERED — six time-slice
-    * files ingested pairwise swapped (s2 s1 s4 s3 s6 s5), so every other
-    * micro-batch delivers events BELOW the previous batch's high-water
-    * mark (the write-once machine fails loudly on exactly this input;
-    * Round13Spec drives both). The watermark delay (2 slice spans) covers
-    * the constructed disorder, a far-future sentinel row advances the
-    * final watermark so every buffer flushes, and the finalized pair
-    * stream equals the batch lag-window's row-for-row. Oracle =
-    * `event_transitions`' SQL verbatim.
+  /** Runs `body` over the deliberately-DISORDERED replay both buffered
+    * live twins ingest: six time-slice files pairwise swapped (s2 s1 s4
+    * s3 s6 s5) — every other micro-batch delivers events BELOW the
+    * previous batch's high-water mark — plus a far-future sentinel row
+    * (reserved user -1, a type no analysis matches) that advances the
+    * closing watermark past every real event so all buffers flush. The
+    * stream `body` gets is watermarked 2 slice spans behind, which covers
+    * the constructed disorder.
     */
-  /** Writes the deliberately-DISORDERED replay both buffered live twins
-    * ingest: six time-slice files pairwise swapped (s2 s1 s4 s3 s6 s5) —
-    * every other micro-batch delivers events BELOW the previous batch's
-    * high-water mark — plus a far-future sentinel row (reserved user -1,
-    * a type no analysis matches) that advances the closing watermark past
-    * every real event so all buffers flush. Returns the watermark delay
-    * (2 slice spans) that covers the constructed disorder.
-    */
-  private def writeSwappedReplay(spark: SparkSession, dir: String,
-      src: String): Long = {
+  private def swappedReplay[T](spark: SparkSession, dir: String, prefix: String)(
+      body: Dataset[BufEvent] => T): T = {
+    implicit val be = Encoders.product[BufEvent]
     val shift = graft.model.RollupConfig.LastKeyShift
-    val ev = graft.model.Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"),
-        expr(s"(ts DIV 1000000000) * $shift + event_id").as("k"))
+    val ev = keyedEvents(spark, dir)
       .withColumn("et", expr(s"timestamp_seconds(k DIV $shift)"))
       .persist()
     try {
@@ -398,65 +318,39 @@ object SessionStream {
       val cuts = (1 to 5).map(i => lo + (hi - lo) * i / 6)
       val slices = (Long.MinValue +: cuts :+ Long.MaxValue).sliding(2).toSeq
         .map { case Seq(a, b) => ev.filter(col("k") > a && col("k") <= b) }
-      // pairwise-swapped ingest order: s2 s1 s4 s3 s6 s5
-      val order = Seq(1, 0, 3, 2, 5, 4)
       val spanSec = ((hi / shift) - (lo / shift)) / 6 + 1
       // sentinel: one far-future row for a reserved user advances the
       // closing watermark past every real event, flushing all buffers
       val sentinelSec = hi / shift + 10 * spanSec
-      DedupStream.writeFiles(
-        order.zipWithIndex.map { case (sliceIdx, fileIdx) =>
-          (slices(sliceIdx).toDF(),
-            f"$src/batch$fileIdx%02d.parquet", 130000L - fileIdx * 10000L)
-        } :+ ((
-          spark.range(1).select(lit(-1L).as("user_id"),
-            lit("sentinel").as("event_type"),
-            lit(sentinelSec * shift).as("k"),
-            expr(s"timestamp_seconds($sentinelSec)").as("et")),
-          s"$src/batch99.parquet", 50000L)): _*)
-      2 * spanSec + 1
+      val sentinel = spark.range(1).select(lit(-1L).as("user_id"),
+        lit("sentinel").as("event_type"),
+        lit(sentinelSec * shift).as("k"),
+        expr(s"timestamp_seconds($sentinelSec)").as("et"))
+      // pairwise-swapped ingest order: s2 s1 s4 s3 s6 s5
+      val files = Seq(1, 0, 3, 2, 5, 4).map(slices) :+ sentinel
+      StreamRun.replay(prefix, files) { src =>
+        body(spark.readStream.schema(bufEventSchema)
+          .option("maxFilesPerTrigger", 1)
+          .parquet(src)
+          .withWatermark("et", s"${2 * spanSec + 1} seconds")
+          .as[BufEvent])
+      }
     } finally ev.unpersist(blocking = true)
   }
 
-  private val bufEventSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("user_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("event_type",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("k",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("et",
-      org.apache.spark.sql.types.TimestampType)))
+  private val bufEventSchema = keyedSchema.add("et", TimestampType)
 
-  def transitionsBufferedQuery(spark: SparkSession, dir: String): DataFrame = {
-    implicit val be = Encoders.product[BufEvent]
-    val src = java.nio.file.Files.createTempDirectory("stream_btrans_src").toString
-    val delaySec = writeSwappedReplay(spark, dir, src)
-    val schema = bufEventSchema
-    val sink = "stream_btrans_" + UUID.randomUUID().toString.replace("-", "")
-    try {
-      CarbonStream.withStreamPartitions(spark) {
-        val q = transitionsBufferedMachine(
-          spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .withWatermark("et", s"$delaySec seconds")
-            .as[BufEvent])
-          .toDF()
-          .writeStream
-          .format("memory")
-          .queryName(sink)
-          .outputMode("append")
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
+  /** The LIVE out-of-order form of `event_transitions`: the SAME matrix
+    * readoff over the [[swappedReplay]] (the write-once machine fails
+    * loudly on exactly this input; Round13Spec drives both), and the
+    * finalized pair stream equals the batch lag-window's row-for-row.
+    * Oracle = `event_transitions`' SQL verbatim.
+    */
+  def transitionsBufferedQuery(spark: SparkSession, dir: String): DataFrame =
+    swappedReplay(spark, dir, "stream_btrans_src") { events =>
       graft.operators.Analytics.transitionProbFrom(
-        CarbonStream.drainMemorySink(spark, sink))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src))
+        StreamRun.collect(transitionsBufferedMachine(events).toDF(), "append"))
     }
-  }
 
   // ----------------------------------------------------------- stream_funnel
 
@@ -529,60 +423,25 @@ object SessionStream {
     */
   def funnelQuery(spark: SparkSession, dir: String): DataFrame = {
     implicit val fe = Encoders.product[FunnelEvent]
-    val shift = graft.model.RollupConfig.LastKeyShift
-    val ev = graft.model.Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"),
-        expr(s"(ts DIV 1000000000) * $shift + event_id").as("k"))
-      .as[FunnelEvent].persist()
-    val src = java.nio.file.Files.createTempDirectory("stream_funnel_src").toString
-    try {
-      val (lo, hi) = {
-        val r = ev.agg(min("k"), max("k")).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      val (c1, c2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-      DedupStream.writeFiles(
-        (ev.filter(col("k") <= c1).toDF(),
-          s"$src/batch0.parquet", 120000L),
-        (ev.filter(col("k") > c1 && col("k") <= c2).toDF(),
-          s"$src/batch1.parquet", 90000L),
-        (ev.filter(col("k") > c2).toDF(),
-          s"$src/batch2.parquet", 60000L))
+    val ev = keyedEvents(spark, dir).persist()
+    try StreamRun.replay("stream_funnel_src", StreamRun.tertiles(ev, col("k"))) { src =>
+      funnelReadoff(StreamRun.collect(funnelMachine(spark.readStream.schema(keyedSchema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src).as[FunnelEvent]), "append"))
     } finally ev.unpersist(blocking = true)
+  }
 
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("k",
-        org.apache.spark.sql.types.LongType)))
-    val sink = "stream_funnel_" + UUID.randomUUID().toString.replace("-", "")
-    try {
-      CarbonStream.withStreamPartitions(spark) {
-        val q = funnelMachine(
-          spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src).as[FunnelEvent])
-          .writeStream
-          .format("memory")
-          .queryName(sink)
-          .outputMode("append")
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
-      val fin = CarbonStream.drainMemorySink(spark, sink)
-        .groupBy("user_id")
-        .agg(max("k1").as("k1"), max("k2").as("k2"), max("k3").as("k3"))
-      graft.operators.Analytics.funnelAggFrom(
-        fin.filter(col("k1").isNotNull).select("user_id", "k1"),
-        fin.filter(col("k2").isNotNull).select("user_id", "k1", "k2"),
-        fin.filter(col("k3").isNotNull).select("user_id", "k2", "k3"))
-    } finally {
-      // the drained memory sink holds the rows; the replay files are done
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src))
-    }
+  /** Both funnel twins' readoff: the per-user max of the write-once
+    * columns, then the batch op's closing aggregate.
+    */
+  private def funnelReadoff(emitted: DataFrame): DataFrame = {
+    val fin = emitted
+      .groupBy("user_id")
+      .agg(max("k1").as("k1"), max("k2").as("k2"), max("k3").as("k3"))
+    graft.operators.Analytics.funnelAggFrom(
+      fin.filter(col("k1").isNotNull).select("user_id", "k1"),
+      fin.filter(col("k2").isNotNull).select("user_id", "k1", "k2"),
+      fin.filter(col("k3").isNotNull).select("user_id", "k2", "k3"))
   }
 
   // ---------------------------------------------- stream_funnel_buffered
@@ -657,38 +516,10 @@ object SessionStream {
     * row carries an all-None triple and drops out of the stage frames.
     * Oracle = `funnel_steps`' SQL verbatim.
     */
-  def funnelBufferedQuery(spark: SparkSession, dir: String): DataFrame = {
-    implicit val be = Encoders.product[BufEvent]
-    val src = java.nio.file.Files.createTempDirectory("stream_bfunnel_src").toString
-    val delaySec = writeSwappedReplay(spark, dir, src)
-    val sink = "stream_bfunnel_" + UUID.randomUUID().toString.replace("-", "")
-    try {
-      CarbonStream.withStreamPartitions(spark) {
-        val q = funnelBufferedMachine(
-          spark.readStream.schema(bufEventSchema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .withWatermark("et", s"$delaySec seconds")
-            .as[BufEvent])
-          .writeStream
-          .format("memory")
-          .queryName(sink)
-          .outputMode("append")
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
-      val fin = CarbonStream.drainMemorySink(spark, sink)
-        .groupBy("user_id")
-        .agg(max("k1").as("k1"), max("k2").as("k2"), max("k3").as("k3"))
-      graft.operators.Analytics.funnelAggFrom(
-        fin.filter(col("k1").isNotNull).select("user_id", "k1"),
-        fin.filter(col("k2").isNotNull).select("user_id", "k1", "k2"),
-        fin.filter(col("k3").isNotNull).select("user_id", "k2", "k3"))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src))
+  def funnelBufferedQuery(spark: SparkSession, dir: String): DataFrame =
+    swappedReplay(spark, dir, "stream_bfunnel_src") { events =>
+      funnelReadoff(StreamRun.collect(funnelBufferedMachine(events), "append"))
     }
-  }
 
   // ------------------------------------------------------------- stream_holt
 
@@ -758,51 +589,17 @@ object SessionStream {
       .select(col("path"), col("ts"), col("event_id"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
       .as[HoltEvt].persist()
-    val src = java.nio.file.Files.createTempDirectory("stream_holt_src").toString
-    try {
-      val (lo, hi) = {
-        val r = ev.agg(min(expr(s"ts * $shift + event_id")),
-          max(expr(s"ts * $shift + event_id"))).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      val (c1, c2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-      def k = expr(s"ts * $shift + event_id")
-      DedupStream.writeFiles(
-        (ev.filter(k <= c1).toDF(), s"$src/batch0.parquet", 120000L),
-        (ev.filter(k > c1 && k <= c2).toDF(), s"$src/batch1.parquet", 90000L),
-        (ev.filter(k > c2).toDF(), s"$src/batch2.parquet", 60000L))
+    val schema = StructType(Seq(
+      StructField("path", StringType),
+      StructField("ts", LongType),
+      StructField("event_id", LongType),
+      StructField("cents", LongType)))
+    val k = expr(s"ts * $shift + event_id")
+    try StreamRun.replay("stream_holt_src", StreamRun.tertiles(ev, k)) { src =>
+      StreamRun.collect(holtMachine(spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src).as[HoltEvt]).toDF(), "append")
     } finally ev.unpersist(blocking = true)
-
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("path",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("cents",
-        org.apache.spark.sql.types.LongType)))
-    val sink = "stream_holt_" + UUID.randomUUID().toString.replace("-", "")
-    try {
-      CarbonStream.withStreamPartitions(spark) {
-        val q = holtMachine(
-          spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src).as[HoltEvt])
-          .toDF()
-          .writeStream
-          .format("memory")
-          .queryName(sink)
-          .outputMode("append")
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
-      CarbonStream.drainMemorySink(spark, sink)
-    } finally {
-      // the drained memory sink holds the rows; the replay files are done
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src))
-    }
   }
 
   // ------------------------------------------------------ stream_attribution
@@ -824,22 +621,8 @@ object SessionStream {
       .select(col("user_id"), col("event_type"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
         expr(s"(ts DIV 1000000000) * $shift + event_id").as("k"))
-    val sink = "stream_attr_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = graft.operators.Analytics.attributionPerUser(ev)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
     graft.operators.Analytics.attributionFrom(
-      CarbonStream.drainMemorySink(spark, sink))
+      StreamRun.collect(graft.operators.Analytics.attributionPerUser(ev), "complete"))
   }
 
   // -------------------------------------------------------------- stream_rfm
@@ -860,22 +643,8 @@ object SessionStream {
       .select(col("user_id"), col("event_type"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
         expr(s"(ts DIV 1000000000) * $shift + event_id").as("k"))
-    val sink = "stream_rfm_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = graft.operators.Analytics.rfmPerUser(ev)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
     graft.operators.Analytics.rfmFrom(
-      CarbonStream.drainMemorySink(spark, sink))
+      StreamRun.collect(graft.operators.Analytics.rfmPerUser(ev), "complete"))
   }
 
   def ops: Seq[Op] = Seq(

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import java.util.UUID
-
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types._
 
 import graft.Op
 import graft.operators.{Carbon, Wire}
@@ -72,42 +71,16 @@ object WireStream {
     implicit val pe = Encoders.product[Packet]
     val pkts = Wire.packets(spark, dir)
       .select(col("conn"), col("p"), col("payload")).as[Packet].persist()
-    val src = java.nio.file.Files.createTempDirectory("stream_reassemble_src").toString
-    try {
-      val mx = pkts.agg(max("p")).head().getLong(0)
-      val (c1, c2) = (mx / 3, 2 * mx / 3)
-      DedupStream.writeFiles(
-        (pkts.filter(col("p") <= c1).toDF(),
-          s"$src/batch0.parquet", 120000L),
-        (pkts.filter(col("p") > c1 && col("p") <= c2).toDF(),
-          s"$src/batch1.parquet", 90000L),
-        (pkts.filter(col("p") > c2).toDF(),
-          s"$src/batch2.parquet", 60000L))
-    } finally pkts.unpersist(blocking = true)
-
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("conn",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("p",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("payload",
-        org.apache.spark.sql.types.StringType)))
-    val sink = "stream_reassemble_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = reassemble(
-        spark.readStream.schema(schema)
+    val schema = StructType(Seq(
+      StructField("conn", LongType),
+      StructField("p", LongType),
+      StructField("payload", StringType)))
+    val relines =
+      try StreamRun.replay("stream_reassemble_src", StreamRun.tertiles(pkts, col("p"))) { src =>
+        StreamRun.collect(reassemble(spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1)
-          .parquet(src).as[Packet])
-        .toDF()
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    val relines = CarbonStream.drainMemorySink(spark, sink)
+          .parquet(src).as[Packet]).toDF(), "append")
+      } finally pkts.unpersist(blocking = true)
     Carbon.withParsedLine(relines, "line")
       .select(
         col("conn"), col("line_no"), col("valid"), col("peer_cmd"),

@@ -55,6 +55,30 @@ class MetricsApiSpec extends AnyFunSuite with TestSpark {
       graft.operators.Rollups.rollups(spark, Sf).count() - applied.totalDeleted)
   }
 
+  test("a daemon answers GET /metrics and /paths before its first flush creates the store") {
+    def answers(store: String): Seq[(Int, String)] = {
+      val daemon = new Daemon(spark, store, Some(now))
+      try {
+        val port = daemon.startHttp()
+        val http = java.net.http.HttpClient.newHttpClient()
+        Seq(s"/metrics?path=${MetricQuery.FetchPath}&from=${now - 3600}&to=$now",
+          "/paths?query=servers.*").map { p =>
+          val r = http.send(java.net.http.HttpRequest.newBuilder(
+            java.net.URI.create(s"http://127.0.0.1:$port$p")).GET().build(),
+            java.net.http.HttpResponse.BodyHandlers.ofString())
+          (r.statusCode(), r.body())
+        }
+      } finally daemon.stop()
+    }
+    val root = java.nio.file.Files.createTempDirectory("metrics_api_store")
+    try {
+      val empty = answers(java.nio.file.Files.createDirectory(root.resolve("empty")).toString)
+      val missing = answers(root.resolve("not_yet_flushed").toString)
+      assert(missing.map(_._1) == Seq(200, 200), s"pre-flush answers: $missing")
+      assert(missing == empty, s"missing store $missing vs empty store $empty")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+  }
+
   test("healthcheck") {
     assert(MetricsApi.healthcheck(spark, Sf))
     assert(!MetricsApi.healthcheck(spark, "/nonexistent"))

@@ -330,7 +330,6 @@ class Round11Spec extends AnyFunSuite with TestSpark {
   test("stream_cardinality: registers merge across micro-batches to the batch sketch") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.operators.OpsStats
-    import graft.streaming.CarbonStream
     implicit val ctx = spark.sqlContext
     import spark.implicits._
     val events = graft.model.Tables.events(spark, Sf)
@@ -344,15 +343,13 @@ class Round11Spec extends AnyFunSuite with TestSpark {
     })
     val in = MemoryStream[(String, Long)]
     val sink = "r11_hll_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = OpsStats.hllRegisterRows(in.toDF().toDF("event_type", "user_id"))
-        .groupBy(col("event_type"), col("r")).agg(max("rank").as("m"))
-        .writeStream.format("memory").queryName(sink).outputMode("complete").start()
-      try {
-        chunks.foreach { c => in.addData(c); q.processAllAvailable() }
-      } finally q.stop()
-    }
-    val streamed = rows(CarbonStream.drainMemorySink(spark, sink))
+    val q = OpsStats.hllRegisterRows(in.toDF().toDF("event_type", "user_id"))
+      .groupBy(col("event_type"), col("r")).agg(max("rank").as("m"))
+      .writeStream.format("memory").queryName(sink).outputMode("complete").start()
+    try {
+      chunks.foreach { c => in.addData(c); q.processAllAvailable() }
+    } finally q.stop()
+    val streamed = try rows(spark.table(sink)) finally spark.catalog.dropTempView(sink)
     val batch = rows(OpsStats.hllRegisterRows(graft.model.Tables.events(spark, Sf))
       .groupBy("event_type", "r").agg(max("rank").as("m")))
     assert(streamed == batch,
@@ -361,24 +358,22 @@ class Round11Spec extends AnyFunSuite with TestSpark {
 
   test("stream_index: prefix-then-full-path arrival converges to leaf=true") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.CarbonStream
     implicit val ctx = spark.sqlContext
     import spark.implicits._
     val in = MemoryStream[String]
     val sink = "r11_idx_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = graft.operators.Index.indexFrom(in.toDF().toDF("path"))
-        .writeStream.format("memory").queryName(sink).outputMode("complete").start()
-      try {
-        // batch 1: "a.b" exists only as a PREFIX of a deeper path
-        in.addData("a.b.c"); q.processAllAvailable()
-        // batch 2: the same node arrives as a FULL path — leaf must flip
-        // to true by max-merge, never flop back
-        in.addData("a.b"); q.processAllAvailable()
-      } finally q.stop()
-    }
-    val leaf = CarbonStream.drainMemorySink(spark, sink).collect()
+    val q = graft.operators.Index.indexFrom(in.toDF().toDF("path"))
+      .writeStream.format("memory").queryName(sink).outputMode("complete").start()
+    try {
+      // batch 1: "a.b" exists only as a PREFIX of a deeper path
+      in.addData("a.b.c"); q.processAllAvailable()
+      // batch 2: the same node arrives as a FULL path — leaf must flip
+      // to true by max-merge, never flop back
+      in.addData("a.b"); q.processAllAvailable()
+    } finally q.stop()
+    val leaf = try spark.table(sink).collect()
       .map(r => r.getAs[String]("node") -> r.getAs[Boolean]("leaf")).toMap
+      finally spark.catalog.dropTempView(sink)
     assert(leaf == Map("a" -> false, "a.b" -> true, "a.b.c" -> true))
   }
 

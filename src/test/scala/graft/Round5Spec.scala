@@ -132,23 +132,19 @@ class Round5Spec extends AnyFunSuite with TestSpark {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val ctx = spark.sqlContext
     import spark.implicits._
-    spark.conf.set(graft.streaming.CarbonStream.RocksDbFlag, "true")
+    spark.conf.set(RocksDbProviderConf,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val chk = java.nio.file.Files.createTempDirectory("rocksdb_chk").toString
     try {
       val in = MemoryStream[(Long, String)]
       val docs = in.toDF.toDF("doc_id", "text")
         .withColumn("lang", lit("en")).withColumn("source", lit("spec"))
         .withColumn("n_chars", length(col("text")).cast("long"))
-      graft.streaming.CarbonStream.withStreamPartitions(spark) {
-        val q = graft.streaming.DedupStream.dedupAgg(docs)
-          .writeStream.format("memory").queryName("rocksdb_dedup")
-          .option("checkpointLocation", chk)
-          .outputMode("complete").start()
-        try {
-          in.addData((1L, "alpha"), (2L, "beta"), (3L, "alpha"), (10L, "gamma"))
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      in.addData((1L, "alpha"), (2L, "beta"), (3L, "alpha"), (10L, "gamma"))
+      graft.streaming.StreamRun.drain(spark, graft.streaming.DedupStream.dedupAgg(docs)
+        .writeStream.format("memory").queryName("rocksdb_dedup")
+        .option("checkpointLocation", chk)
+        .outputMode("complete"))
       val got = spark.table("rocksdb_dedup").collect()
         .map(r => (r.getLong(1), r.getLong(2))).toSet
       // "alpha": ids 1,3 -> keep 1, 2 copies; "beta": keep 2; "gamma": id 10
@@ -163,12 +159,13 @@ class Round5Spec extends AnyFunSuite with TestSpark {
         s"expected RocksDB zip/changelog state files, got: ${stateFiles.mkString(",")}")
       assert(!stateFiles.exists(_.endsWith(".delta")),
         "found HDFS-backed .delta state files — RocksDB provider was not in effect")
-      // and the provider override is restored after the run (getOption
-      // surfaces the session default — HDFS-backed — once no override is set)
-      assert(!spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-        .contains("RocksDB"))
-    } finally spark.conf.unset(graft.streaming.CarbonStream.RocksDbFlag)
+    } finally {
+      spark.catalog.dropTempView("rocksdb_dedup")
+      spark.conf.unset(RocksDbProviderConf)
+    }
   }
+
+  private val RocksDbProviderConf = "spark.sql.streaming.stateStore.providerClass"
 
   test("SURVEY §2 operator inventory is 1:1 with Registry.ops") {
     val survey = new String(java.nio.file.Files.readAllBytes(

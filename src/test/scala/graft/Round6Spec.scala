@@ -84,14 +84,43 @@ class Round6Spec extends AnyFunSuite with TestSpark {
   }
 
   test("streaming memory-sink queries drop their temp views after draining") {
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    val stagePrefixes = Seq("graft_onefile", "graft_slice",
+      "stream_dedup_wm_src", "stream_reassemble_src")
+    def staged(): Set[String] = Files.list(tmp).iterator().asScala
+      .map(_.getFileName.toString)
+      .filter(n => stagePrefixes.exists(n.startsWith)).toSet
+    val stagedBefore = staged()
     val before = spark.catalog.listTables().count()
     val rollup = graft.streaming.CarbonStream.rollupQuery(spark, Sf)
     assert(rollup.count() > 0, "drained frame must stay readable after view drop")
     val sess = graft.streaming.SessionStream.sessionizeQuery(spark, Sf)
     assert(sess.count() >= 0)
+    // the replayed ops stage their micro-batch files in temp dirs
+    assert(graft.streaming.DedupStream.dedupWatermarkQuery(spark, Sf).count() > 0)
+    assert(graft.streaming.WireStream.reassembleQuery(spark, Sf).count() > 0)
     val after = spark.catalog.listTables().count()
     assert(after == before,
       s"memory-sink temp views leaked: $before tables before, $after after")
+    val leaked = staged() -- stagedBefore
+    assert(leaked.isEmpty, s"replay staging dirs leaked under $tmp: $leaked")
+
+    // a run whose batch throws still drops its sink view and restores the
+    // session's shuffle width
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val ctx = spark.sqlContext
+    import spark.implicits._
+    val in = MemoryStream[Int]
+    in.addData(1, 2, 3)
+    val width = spark.conf.get("spark.sql.shuffle.partitions")
+    intercept[Exception] {
+      graft.streaming.StreamRun.collect(
+        in.toDF().selectExpr("assert_true(value < 0) AS ok"), "append").count()
+    }
+    assert(spark.catalog.listTables().count() == before,
+      "a failed memory-sink run leaked its temp view")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == width,
+      "a failed run left the stream width on the session")
   }
 
   test("appendStateSlice clusters each flush to ONE file per partition directory") {
